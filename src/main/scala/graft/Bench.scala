@@ -1,57 +1,145 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
 
-/** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line for the driver's BENCH_r{N}.json.
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR
+  * and prints the per-query seconds for the driver's BENCH_r{N}.json.
   *
   * An untimed warmup pass runs first so the timed pass measures
   * steady-state execution (JIT + codegen + parquet footer caches), not
   * JVM startup attributed to whichever query happens to run first.
+  *
+  * A query that throws is never timed: it is reported as failed with
+  * its exception class, left out of the total, listed under "failed"
+  * in target/bench_detail.json, and makes the run exit 1.
   */
 object Bench {
+
+  /** One query measured under the bench protocol: the cache-building
+    * warm pass, every timed rep, and whether the min stayed above the
+    * storm bound after retries. */
+  final case class Timing(warm: Double, reps: Seq[Double],
+      suspect: Boolean) {
+    def sec: Double = reps.min
+  }
+
+  // Quiesce BETWEEN reps, not just between queries: the r10 pair
+  // still recorded q187 at 24.7 s (isolated: 4.0 s) and q249 at
+  // 12.6 s (r09: 0.94 s) because the cleaner/GC backlog built by a
+  // query's OWN warm pass (a graph loop registers thousands of
+  // shuffle/broadcast cleanup refs) drained inside its timed reps.
+  // A forced GC plus a short pause lets the ContextCleaner process
+  // the freshly-enqueued references while no window is open; the
+  // retry guard in `measure` remains as backstop, not first line.
+  private def quiesce(): Unit = { System.gc(); Thread.sleep(100L) }
+
+  /** The bench protocol for one query; `Left` carries the throwable of
+    * the first pass that failed.
+    *
+    * Cache discipline: measure each query at steady state WITH its own
+    * persisted intermediates warm, but never let caches leak across
+    * queries. Round 3 kept every query's caches resident for the whole
+    * run — by the tail the CacheManager held GBs and eviction + GC
+    * churn ran q37 3× slower than round 2 on identical code. Clearing
+    * between every rep (tried next) overshoots the other way: all
+    * three passes run fully cold and queries pay their intermediate
+    * builds in the timed window (q106 0.7→6.5 s). So: one untimed run
+    * populates the query's caches (and absorbs JIT/codegen), two timed
+    * reps measure warm latency, then `releaseQueryCaches` drops the
+    * caches before the next query. Memory is bounded by ONE query's
+    * working set; the reported number is steady-state latency.
+    *
+    * Variance guard: the warm (cache-building, JIT-cold) run is an
+    * upper bound on steady-state warm latency, so a timed min ABOVE
+    * 2x warm means something external (cleaner storm, co-tenant load)
+    * landed inside both timed windows — r09's driver run had q390 at
+    * 11.1s where the same tree's pair run measured 0.93s. Retry up to
+    * 2 extra reps and keep the overall min; a query whose min STILL
+    * exceeds the bound is flagged `suspect`, so the committed artifact
+    * carries the anomaly instead of a prose note. */
+  def measure(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => DataFrame): Either[Throwable, Timing] =
+    try {
+      def rep(): Double = {
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).count()
+        val sec = (System.nanoTime() - t0) / 1e9
+        quiesce()
+        sec
+      }
+      val warm = rep()
+      val bound = math.max(2 * warm, warm + 0.1)
+      var taken = Seq(rep(), rep())
+      while (taken.min > bound && taken.size < 4) taken :+= rep()
+      Right(Timing(warm, taken, taken.min > bound))
+    } catch { case e: Throwable => Left(e) }
+    // The cache-lifetime contract: builders persist, harness
+    // boundaries release — after a failure too.
+    finally GraftSession.releaseQueryCaches(spark)
+
+  private def r3(v: Double): String = f"$v%.3f"
+  private def str(s: String): String = Verify.jsonStr(s)
+
+  /** `"name":sec` entries packed into `{"queries":{…}}` lines of at
+    * most 2 KB each (an entry is never split). */
+  def chunkedLines(entries: Seq[String]): Seq[String] = {
+    val open = "{\"queries\":{"
+    def bytes(s: String) = s.getBytes(UTF_8).length
+    entries.foldLeft(Vector.empty[Vector[String]]) { (acc, e) =>
+      acc.lastOption match {
+        case Some(cur) if bytes(open) + cur.map(bytes(_) + 1).sum +
+            bytes(e) + 2 <= 2048 =>
+          acc.init :+ (cur :+ e)
+        case _ => acc :+ Vector(e)
+      }
+    }.map(_.mkString(open, ",", "}}"))
+  }
+
+  /** The stdout lines and the bench_detail.json body of one run.
+    *
+    * The driver's stdout capture truncates: rounds 1-5 came back
+    * parsed:null because one metric line carrying the whole per-query
+    * map outgrew the tail buffer, and r12's ~12 KB line still could not
+    * be parsed per query. So the map goes out as `{"queries":{…}}`
+    * lines of at most 2 KB, failed queries one short line each, and the
+    * LAST line is the short map-free total that survives any tail
+    * window. The untruncated copy is target/bench_detail.json. */
+  def report(sfDir: String,
+      results: Seq[(String, Either[Throwable, Timing])],
+      probe: (Double, Double)): (Seq[String], String) = {
+    val timed = results.collect { case (n, Right(t)) => n -> t }
+    val failed =
+      results.collect { case (n, Left(e)) => n -> e.getClass.getName }
+    def obj(kvs: Seq[(String, String)]) =
+      kvs.map { case (k, v) => s"${str(k)}:$v" }.mkString("{", ",", "}")
+    val secs = timed.map { case (n, t) => s"${str(n)}:${r3(t.sec)}" }
+    val total = r3(timed.map(_._2.sec).sum)
+    val short =
+      s"""{"metric":"total","value":$total,"unit":"sec","n":${timed.size},"sf":${str(sfDir)}}"""
+    val lines = chunkedLines(secs) ++ failed.map { case (n, c) =>
+      s"""{"query":${str(n)},"status":"failed","error":${str(c)}}"""
+    } :+ short
+    val detail = obj(Seq(
+      "detail" -> secs.mkString("{", ",", "}"),
+      "failed" -> obj(failed.map { case (n, c) => n -> str(c) }),
+      "short" -> short,
+      "box_probe" -> obj(Seq("cpu_sec" -> r3(probe._1),
+        "shuffle_sec" -> r3(probe._2))),
+      "storm_suspects" ->
+        timed.collect { case (n, t) if t.suspect => str(n) }
+          .mkString("[", ",", "]"),
+      "reps_warm_first" -> obj(timed.map { case (n, t) =>
+        n -> (t.warm +: t.reps).map(r3).mkString("[", ",", "]")
+      })))
+    (lines, detail)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
-      .getOrElse(32)
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
     val names = SparkEntry.queries.keys.toSeq.sorted
-    // Cache discipline: measure each query at steady state WITH its own
-    // persisted intermediates warm, but never let caches leak across
-    // queries. Round 3 kept every query's caches resident for the whole
-    // run — by the tail the CacheManager held GBs and eviction + GC
-    // churn ran q37 3× slower than round 2 on identical code. Clearing
-    // between every rep (tried next) overshoots the other way: all
-    // three passes run fully cold and queries pay their intermediate
-    // builds in the timed window (q106 0.7→6.5 s). So: per query, one
-    // untimed run populates its caches (and absorbs JIT/codegen), two
-    // timed reps measure warm latency, then the caches are dropped
-    // before the next query. Memory is bounded by ONE query's working
-    // set; the reported number is steady-state latency — the same
-    // definition the min-of-2-reps always claimed.
-    // The gc call is load-bearing: a 127-query run registers thousands
-    // of shuffle/broadcast cleanup references, and with a large heap
-    // old-gen GC may not run for many minutes — when it finally does,
-    // the ContextCleaner drains the whole backlog in one synchronous
-    // storm against the single-threaded BlockManager endpoint,
-    // blocking whatever query is being timed (observed: map-only
-    // queries late in the run going 0.2 s → 6 s). Forcing GC between
-    // queries keeps each drain small and outside every timed window.
-    def isolate(): Unit = GraftSession.releaseQueryCaches(spark)
-    // Quiesce BETWEEN reps, not just between queries: the r10 pair
-    // still recorded q187 at 24.7 s (isolated: 4.0 s) and q249 at
-    // 12.6 s (r09: 0.94 s) because the cleaner/GC backlog built by a
-    // query's OWN warm pass (a graph loop registers thousands of
-    // shuffle/broadcast cleanup refs) drained inside its timed reps.
-    // A forced GC plus a short pause lets the ContextCleaner process
-    // the freshly-enqueued references while no window is open; the
-    // retry guard below remains as backstop, not first line.
-    def quiesce(): Unit = { System.gc(); Thread.sleep(100L) }
-    def timeOne(name: String): Double = {
-      val t0 = System.nanoTime()
-      try { SparkEntry.queries(name)(spark, sfDir).count() }
-      catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
-    }
     // Box calibration: two fixed data-independent probes (pure-CPU fold
     // and a 1M-key shuffle) timed before the suite, so cross-round
     // comparisons divide by a MEASURED machine factor instead of prose
@@ -71,77 +159,19 @@ object Bench {
       (math.min(t(cpuDf.count()), t(cpuDf.count())),
         math.min(t(shufDf.count()), t(shufDf.count())))
     }
-    val (probeCpu, probeShuffle) = boxProbe()
-    isolate()
-    // Variance guard: the warm (cache-building, JIT-cold) run is an
-    // upper bound on steady-state warm latency, so a timed min ABOVE
-    // 2x warm means something external (cleaner storm, co-tenant load)
-    // landed inside both timed windows — r09's driver run had q390 at
-    // 11.1s where the same tree's pair run measured 0.93s, and the
-    // whole 354s-vs-234s harness gap was such isolated blowups, not a
-    // box factor (median per-query ratio 1.03). Retry up to 2 extra
-    // reps and keep the overall min; all reps are recorded in
-    // bench_detail.json so the next gap is diagnosable. A query whose
-    // min STILL exceeds the bound after retries is recorded in
-    // storm_suspects — the committed artifact carries the anomaly
-    // instead of a prose note.
-    val reps = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
-    val suspects = scala.collection.mutable.ArrayBuffer[String]()
+    val probe = boxProbe()
+    GraftSession.releaseQueryCaches(spark)
     val results = names.map { name =>
-      val warm = timeOne(name) // cache-building pass; timed for the guard
-      quiesce()
-      def rep(): Double = { val t = timeOne(name); quiesce(); t }
-      var taken = Seq(rep(), rep())
-      while (taken.min > math.max(2 * warm, warm + 0.1) && taken.size < 4)
-        taken :+= rep()
-      if (taken.min > math.max(2 * warm, warm + 0.1)) suspects += name
-      reps(name) = warm +: taken
-      isolate()
-      name -> taken.min
+      val r = measure(spark, sfDir, SparkEntry.queries(name))
+      r.left.foreach(e => System.err.println(s"[bench] $name failed: $e"))
+      name -> r
     }
-    // The driver's stdout capture truncates: rounds 1-5 all came back
-    // parsed:null because the metric line carrying the full per-query
-    // map outgrew the tail buffer (even compacted, 277 entries is
-    // ~4 KB). So the LAST line printed is now a SHORT, map-free
-    // summary — {"metric":"total","value":…,"n":…} — guaranteed to fit
-    // any tail window. The long per-query map still goes out earlier
-    // on stdout (for human eyes) and, authoritatively, to
-    // target/bench_detail.json where the judge reads it untruncated.
-    def r3(v: Double): String = f"$v%.3f"
-    // Full declared names in the contract line (r12): the r11 judge
-    // could not compare per-query times round-over-round because the
-    // truncated keys ("q379") never matched the declared names and the
-    // tail capture cut the map anyway. The metric line now carries the
-    // exact name→sec map the contract states; the authoritative
-    // untruncated copy is target/bench_detail.json (committed per
-    // round under artifacts/), and the LAST line stays the short
-    // map-free total that survives any tail window.
-    val qs = results.map { case (k, v) =>
-      "\"" + k + "\":" + r3(v)
-    }.mkString("{", ",", "}")
-    val total = r3(results.map(_._2).sum)
-    val metric =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
-    val detail = results.map { case (k, v) => "\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    val short =
-      s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"sf":"$sfDir"}"""
-    println(metric)
-    println(s"""{"detail":$detail}""")
-    val repsJson = reps.map { case (k, vs) =>
-      "\"" + k + "\":[" + vs.map(r3).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val suspectsJson =
-      suspects.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val probeJson = s"""{"cpu_sec":${r3(probeCpu)},""" +
-      s""""shuffle_sec":${r3(probeShuffle)}}"""
+    val (lines, detail) = report(sfDir, results, probe)
     try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("target/bench_detail.json"),
-      s"""{"metric_line":$metric,"detail":$detail,"short":$short,""" +
-        s""""box_probe":$probeJson,"storm_suspects":$suspectsJson,""" +
-        s""""reps_warm_first":$repsJson}""")
+      java.nio.file.Paths.get("target/bench_detail.json"), detail)
     catch { case _: Throwable => () }
-    println(short)
+    lines.foreach(println)
     spark.stop()
+    if (results.exists(_._2.isLeft)) sys.exit(1)
   }
 }

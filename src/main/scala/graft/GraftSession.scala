@@ -65,8 +65,14 @@ object GraftSession {
     System.gc()
   }
 
+  /** Local session on `SPARK_GRAFT_CPUS` cores when set, else on every
+    * available core — the one place the harness mains read that knob. */
+  def local(): SparkSession = local(
+    sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
+      .getOrElse(Runtime.getRuntime.availableProcessors()))
+
   /** Local session sized like the driver harness (local[n], UI off). */
-  def local(cores: Int = 32): SparkSession = {
+  def local(cores: Int): SparkSession = {
     val s = builder(Some(cores))
       .master(s"local[$cores]")
       .config("spark.ui.enabled", "false")

@@ -6,8 +6,8 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Machine-checked plan quality: the properties `graft.Explain` is used
-  * to eyeball are asserted here so a regression (lost pushdown, lost
+/** Machine-checked plan quality: the properties `graft.Probe --plan`
+  * prints for eyeballing are asserted here so a regression (lost pushdown, lost
   * broadcast, lost codegen) fails the build, not just the benchmark.
   */
 class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {

@@ -23,14 +23,9 @@ class ServeAtScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   // Shared test session: the bucketed tables carry an explicit
   // `option("path", servingDir/...)` and mode overwrite, so only the
   // metastore ENTRY lands in the shared warehouse — data stays in the
-  // temp dir and reruns overwrite cleanly.
-  private lazy val spark = {
-    val s = graft.SparkTestSession.spark
-    s.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    s.conf.set(
-      "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    s
-  }
+  // temp dir and reruns overwrite cleanly. The serving keys the layout
+  // needs come with the session (GraftSession.builder).
+  private lazy val spark = graft.SparkTestSession.spark
 
   override def afterAll(): Unit = graft.SparkTestSession.cleanup()
 

@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One SparkSession/SparkContext shared by every suite in the (forked,
-  * sequential) test JVM.
+  * sequential) test JVM, built by `GraftSession.builder` so the suites
+  * test the plans the engine ships (co-partitioning, bucketed scans, AQE
+  * coalescing as `Bench`, `Verify` and perfbench run them).
   *
   * The previous fixture — a per-suite lazy `getOrCreate` plus
   * `spark.stop()` in `afterAll` — raced SparkContext bookkeeping across
@@ -17,24 +19,24 @@ import org.apache.spark.sql.SparkSession
   *
   * Per-suite isolation moves to [[cleanup]], which every suite's
   * `afterAll` calls instead of `stop()`: caches and temp views the
-  * suite leaked are dropped and the session conf keys suites are known
-  * to touch are restored, so suite order cannot change results.
+  * suite leaked are dropped and the session conf is restored to the
+  * snapshot taken when the session was built, so suite order cannot
+  * change results.
   */
 object SparkTestSession {
-  val defaultShufflePartitions = "4"
 
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = GraftSession.builder(Some(4))
       .master("local[4]")
-      .config("spark.sql.shuffle.partitions", defaultShufflePartitions)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(new graft.functions.GraftExtensions)
       .appName("graft-test-shared")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    builtConf = s.conf.getAll
     s
   }
+
+  private var builtConf = Map.empty[String, String]
 
   /** Suite-boundary hygiene replacing the old `spark.stop()`. */
   def cleanup(): Unit = {
@@ -42,15 +44,16 @@ object SparkTestSession {
     s.sharedState.cacheManager.clearCache()
     s.sessionState.catalog.getTempViewNames()
       .foreach(s.catalog.dropTempView)
-    s.conf.set("spark.sql.shuffle.partitions", defaultShufflePartitions)
-    // Keys individual suites override inside tests; restored here too in
-    // case a failing test skipped its own finally-restore.
-    s.conf.set("spark.sql.adaptive.enabled", "true")
-    s.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    s.conf.set("spark.sql.exchange.reuse", "true")
-    s.conf.unset("spark.sql.requireAllClusterKeysForCoPartition")
-    s.conf.unset(
-      "spark.sql.sources.bucketing.autoBucketedScan.enabled")
+    // Restore every key a suite set, changed or unset — also when a
+    // failing test skipped its own finally-restore.
+    val now = s.conf.getAll
+    (now.keySet ++ builtConf.keySet).foreach { k =>
+      (builtConf.get(k), now.get(k)) match {
+        case (Some(v), cur) if !cur.contains(v) => s.conf.set(k, v)
+        case (None, Some(_)) => s.conf.unset(k)
+        case _ => ()
+      }
+    }
     System.gc()
   }
 }

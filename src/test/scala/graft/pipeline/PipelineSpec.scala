@@ -317,10 +317,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       buckets = 4)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    // Accept subset-key co-partitioning: both sides are bucketed on
-    // page_id, which co-locates equal (page_id, raw_sha1) rows too.
-    // Since Spark 3.3 this needs the all-cluster-keys requirement off.
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
+    // Subset-key co-partitioning (both sides bucketed on page_id, which
+    // co-locates equal (page_id, raw_sha1) rows too) relies on the
+    // session's requireAllClusterKeysForCoPartition=false
+    // (GraftSession.builder).
     try {
       val ch = CitationPipeline.servingTable(spark, out,
         "citation_histories")
@@ -341,7 +341,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.unset("spark.sql.requireAllClusterKeysForCoPartition")
     }
   }
 
@@ -353,9 +352,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // A filter-only query has no join/agg that "needs" the bucket
     // partitioning, so Spark's auto-bucketed-scan heuristic would
     // disable the bucketed read — and with it, bucket PRUNING. Serving
-    // sessions pin it on (documented in CitationPipeline).
-    spark.conf.set(
-      "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+    // sessions turn the heuristic off (GraftSession.builder).
     val ch = CitationPipeline.servingTable(spark, out,
       "citation_histories")
     val q = ch.filter(
@@ -369,8 +366,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(scan.metadata.get("SelectedBucketsCount")
       .exists(_.contains("1 out of 4")),
       s"expected bucket pruning, got: ${scan.metadata}")
-    spark.conf.unset(
-      "spark.sql.sources.bucketing.autoBucketedScan.enabled")
   }
 
   test("DataSource V2: format(\"mwrev\") reads bundles") {

@@ -101,7 +101,7 @@ def main():
     # A query whose in-suite small-sf time is deflated by suite-warm
     # caches (q204's r10 story: 1.40s in-suite vs 2.05s isolated at
     # sf0.1 -> a phantom 13.6x growth vs the real 9.2x) gets a FRESH-JVM
-    # graft.TimeOne measurement recorded IN the pair artifact, so
+    # graft.Probe --time measurement recorded IN the pair artifact, so
     # scale_gate can adjudicate the in-suite/isolation discrepancy from
     # committed numbers instead of prose. The probe list is committed in
     # tools/adjudications.json ("isolation_probes").
@@ -132,7 +132,7 @@ def main():
             f"exceeds {GROWTH_TRIGGER}x (0.8x of the 12x gate ceiling)")
     if probes:
         log(f"isolation probes (fresh JVM): {', '.join(probes)}")
-        txt = run_sbt(f"graft.TimeOne {','.join(probes)} {SF}")
+        txt = run_sbt(f"graft.Probe --time {SF} {' '.join(probes)}")
         iso = {}
         for line in txt.splitlines():
             if "[time-one]" in line:

@@ -68,7 +68,7 @@ def result_rows(path):
 
 
 def iso_map(path):
-    """Fresh-JVM TimeOne isolation times recorded by bench_pair.py for
+    """Fresh-JVM `graft.Probe --time` isolation times recorded by bench_pair.py for
     adjudicated probe queries (tools/adjudications.json
     "isolation_probes"); empty for artifacts predating r11."""
     try:
@@ -118,7 +118,7 @@ def main():
     new = ratios(small, qmap(new_p), floor)
 
     # Isolation override: when BOTH this round's pair artifacts carry a
-    # fresh-JVM TimeOne measurement for a query (bench_pair.py probes
+    # fresh-JVM Probe --time measurement for a query (bench_pair.py probes
     # the committed adjudications "isolation_probes" list), the ceiling
     # check uses the isolation pair — the in-suite small-side number is
     # deflated by suite-warm caches for exactly the probed queries
@@ -131,7 +131,7 @@ def main():
             iso_ratio = iso_big[n] / max(iso_small[n], 1e-9)
             print(f"[scale-gate] isolation override: {n} in-suite "
                   f"{new[n]:.1f}x -> isolated {iso_ratio:.1f}x "
-                  f"(fresh-JVM TimeOne pair {iso_small[n]:.2f}s -> "
+                  f"(fresh-JVM Probe --time pair {iso_small[n]:.2f}s -> "
                   f"{iso_big[n]:.2f}s, recorded in both artifacts)")
             new[n] = iso_ratio
         elif small.get(n, 0.0) >= floor:
@@ -145,7 +145,7 @@ def main():
             iso_ratio = iso_big[n] / max(small[n], 1e-9)
             print(f"[scale-gate] isolation override: {n} in-suite "
                   f"{new[n]:.1f}x -> isolated-over-in-suite "
-                  f"{iso_ratio:.1f}x (fresh-JVM TimeOne {iso_big[n]:.2f}s "
+                  f"{iso_ratio:.1f}x (fresh-JVM Probe --time {iso_big[n]:.2f}s "
                   f"/ in-suite small {small[n]:.2f}s — conservative "
                   f"denominator, no small-side probe recorded)")
             new[n] = iso_ratio
